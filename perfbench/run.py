@@ -38,9 +38,8 @@ def per_layer_metrics() -> dict[str, str]:
     layer it does not run (the crawl tables on query_suite, the queries on
     the crawls)."""
     from crawl_workload import PHASES, TABLES
-    from oracle_sql import HEADLINE
     from spans import METRIC_FIELDS
-    from suite_workload import MODULES
+    from suite_workload import MODULES, SUITE
 
     m = {"extract.pages_per_s": "1/s", "urlnorm.urls_per_s": "1/s"}
     for ph in PHASES:
@@ -50,7 +49,7 @@ def per_layer_metrics() -> dict[str, str]:
     m["seen.links_dedup_slope_s"] = "s"
     for t in TABLES:
         m[f"checkpoint.{t}_mb"] = "MB"
-    for q in HEADLINE:
+    for q in SUITE:
         m[f"query.{q}_s"] = "s"
     for mod in MODULES:
         m[f"operators.{mod}_s"] = "s"
