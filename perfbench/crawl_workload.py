@@ -136,11 +136,12 @@ def measure(run, spark) -> None:
                    spec.round_ms, spec.max_retries, spec.max_rounds)
     run.web = web
     run.log(f"input ready: {len(web.pages)} pages, {exp.rounds} rounds expected")
-    rates, rounds, sizes = [], [], []
+    rates, round_means, sizes = [], [], []
     window = 0.0
     k = 0
-    # whole crawls until the window is full; at least one
-    while k == 0 or window + window / k <= run.args.seconds:
+    # whole crawls while the next is expected to end inside the window; at
+    # least two, so the median is not the first crawl alone
+    while k < 2 or window + window / k <= run.args.seconds:
         ckpt = os.path.join(run.work, f"ckpt_{k}")
         try:
             eng, meta, secs = _crawl(run, spark, paths, spec, ckpt,
@@ -151,11 +152,15 @@ def measure(run, spark) -> None:
             run.fail_check("crawl", [f"{type(e).__name__}: {e}"])
             break
         window += secs
-        run.log(f"crawl {k} done in {secs:.2f}s")
-        k += 1
         per_round = _round_seconds(ckpt)
+        run.log(f"crawl {k} done in {secs:.2f}s, rounds "
+                + " ".join(f"{r:.2f}" for r in per_round))
+        k += 1
         run.attempted += len(per_round)
-        rounds += per_round
+        # the whole crawl's time per round: its rounds differ in size (seed
+        # round, bulk round, dead-link round), so one round's time, or their
+        # median, jumps between them from run to run
+        round_means.append(secs / max(len(per_round), 1))
         sizes.append(dir_mb(ckpt))
         with run.tracer.span("check"):
             obs = _observe(eng, meta)
@@ -169,7 +174,7 @@ def measure(run, spark) -> None:
             shutil.rmtree(ckpt, ignore_errors=True)
         spark.catalog.clearCache()
     run.e2e["items_per_s"] = median(rates)
-    run.e2e["op_s"] = median(rounds)
+    run.e2e["op_s"] = median(round_means)
     run.e2e["output_mb"] = median(sizes)
 
 
@@ -223,5 +228,8 @@ def trace_layers(run) -> None:
     rows = fold_event_log(read_events(event_log_file(run.event_dir)),
                           run.tracer.spans)
     op_spans = [s.name for s in run.tracer.spans if s.name.startswith("round_")]
-    fold_spark_rows(run, rows, op_spans + ["construct"], len(op_spans))
+    # a run crawls more than once: each span name is folded once, and the
+    # per-operation shares divide by every round of every crawl
+    fold_spark_rows(run, rows, sorted(set(op_spans)) + ["construct"],
+                    len(op_spans))
     layer_probes(run, run.web)

@@ -1,9 +1,10 @@
 """Benchmark of the crawl engine and the query suite.
 
-    python3 perfbench/run.py --workload crawl_wide --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload crawl_wide --seed 1 --seconds 30 --trace 0
 
 Run from the repository root. Workloads: crawl_wide, crawl_deep,
-query_suite (see README.md). The last line of standard output is one JSON
+query_suite (see README.md; BENCHMARK.json lists crawl_wide and
+query_suite). The last line of standard output is one JSON
 object: ``correct``, ``attempted``, ``failed`` and ``metrics``, the
 end-to-end metrics with ``--trace 0`` and the per-layer ones with
 ``--trace 1``. Everything the run writes goes under ``.perfbench/`` in the
